@@ -53,8 +53,6 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
     val autoCompactTargetFileBytes: Long = 128L << 20) {
   import SqlParser._
 
-  registerSessionFunctions()
-
   def execute(sql: String): DataFrame = SqlParser.parse(sql) match {
     case CreateDatabase(name, ine) =>
       catalog.createDatabase(name, ine); spark.emptyDataFrame
@@ -1251,31 +1249,27 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
   // current_catalog / current_database / current_schema / current_user /
   // current_role / inet_client_port, values bound to the connection context
   // (reference: src/sql/postgresql/functions/mod.rs:31-193). Spark's parser
-  // special-cases some of these names, so the engine rewrites them to
-  // graft_-prefixed session UDFs and re-aliases to the PG column name.
+  // special-cases some of these names, so the engine splices THIS engine's
+  // context values into the statement as SQL literals and re-aliases to
+  // the PG column name. Nothing is registered on the shared session: two
+  // engines on one SparkSession never see each other's values.
 
-  private def registerSessionFunctions(): Unit = {
-    val db = ctx.database
-    val user = ctx.user
-    val port = ctx.port
-    spark.udf.register("graft_current_catalog", () => db)
-    spark.udf.register("graft_current_database", () => db)
-    spark.udf.register("graft_current_schema", () => "public")
-    spark.udf.register("graft_current_user", () => user)
-    spark.udf.register("graft_inet_client_port", () => port)
+  private val sessionFns: Map[String, String] = {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val db = Literal(ctx.database).sql
+    val user = Literal(ctx.user).sql
+    Map(
+      "current_catalog" -> db,
+      "current_database" -> db,
+      "current_schema" -> Literal("public").sql,
+      "current_user" -> user,
+      "current_role" -> user,
+      "session_user" -> user,
+      // bare `user` aliases current_user (reference:
+      // src/sql/postgresql/functions/mod.rs:125)
+      "user" -> user,
+      "inet_client_port" -> Literal(ctx.port).sql)
   }
-
-  private val sessionFns: Map[String, String] = Map(
-    "current_catalog" -> "graft_current_catalog",
-    "current_database" -> "graft_current_database",
-    "current_schema" -> "graft_current_schema",
-    "current_user" -> "graft_current_user",
-    "current_role" -> "graft_current_user",
-    "session_user" -> "graft_current_user",
-    // bare `user` aliases current_user (reference:
-    // src/sql/postgresql/functions/mod.rs:125)
-    "user" -> "graft_current_user",
-    "inet_client_port" -> "graft_inet_client_port")
 
   /** Splices replacements into the ORIGINAL text — string escapes,
     * comments, and whitespace pass through untouched. Session-function
@@ -1310,7 +1304,7 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
             case None | Some(Sym(",")) | Some(Word("from")) => true
             case _ => false
           })
-          out.append(sessionFns(w)).append("()")
+          out.append(sessionFns(w))
           if (aliased) out.append(" as `").append(w).append("`")
           copied = endPos
           i = j
@@ -1444,30 +1438,17 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
         val offsets = partCounts.scanLeft(0L)(_ + _)
         val starts: Map[Int, Long] = missingSerials
           .map(c => c.id -> catalog.reserveSerial(db, schema, table, c, total)).toMap
-        // each invocation registers UNIQUELY-named temp functions (and
-        // drops them once the plan is analyzed): a shared name would
-        // cross-wire offsets between CONCURRENT inserts into the same
-        // table
-        val reg = spark.sessionState.functionRegistry
-        val token = java.util.UUID.randomUUID().toString.replace("-", "")
-        val registered = Seq.newBuilder[String]
-        val outCols: Seq[org.apache.spark.sql.Column] = desc.columns.map { c =>
+        // each column closes over THIS insert's offsets, so concurrent
+        // inserts into the same table never share id state
+        val outCols = desc.columns.map { c =>
           starts.get(c.id) match {
             case Some(start) =>
-              val fname = s"graft_serial_${c.id}_$token"
-              reg.createOrReplaceTempFunction(fname,
-                _ => graft.functions.PartitionOffsetId(offsets.map(_ + start)), "built-in")
-              registered += fname
-              expr(s"$fname()").cast(c.typeKind.sparkType).as(c.name)
+              graft.functions.GraftFunctions.partitionOffsetId(offsets.map(_ + start))
+                .cast(c.typeKind.sparkType).as(c.name)
             case None => col(c.name)
           }
         }
-        // Dataset construction analyzes the plan, so the resolved
-        // expression instances are already bound — safe to unregister
-        val out = pre.select(outCols: _*)
-        registered.result().foreach(f =>
-          reg.dropFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(f)))
-        (out, total)
+        (pre.select(outCols: _*), total)
       }
 
       // NOT NULL validation on the provided data (counted in the fused

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -485,13 +484,11 @@ object HashOps {
     c
   }
 
-  /** Count of tokens that are members of `words` — value-identical to
+  /** Count of tokens that are members of the word `set` (built once per
+    * expression, not per row) — value-identical to
     * `size(filter(toks, t -> array_contains(array(words...), t)))`
     * (UTF8String equality both ways). */
-  def countIn(arr: ArrayData, words: Array[UTF8String]): Int = {
-    val set = new java.util.HashSet[UTF8String](words.length * 2)
-    var j = 0
-    while (j < words.length) { set.add(words(j)); j += 1 }
+  def countIn(arr: ArrayData, set: java.util.HashSet[UTF8String]): Int = {
     var c = 0
     var i = 0
     while (i < arr.numElements()) {
@@ -804,6 +801,9 @@ case class DropChunks(left: Expression, right: Expression, w: Int) extends Binar
   * the banding Generate inside whole-stage codegen where the
   * CodegenFallback transform/shiftright spelling exiled it. */
 case class BandBits(child: Expression, bands: Int, width: Int) extends UnaryExpression {
+  // a shift of 64 or more wraps (Java masks the shift distance), so bands
+  // past the 64th bit would silently repeat low bits
+  require(bands * width <= 64, s"band_bits: bands * width must be <= 64, got $bands * $width")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullSafeEval(input: Any): Any =
     HashOps.bandBits(input.asInstanceOf[Long], bands, width)
@@ -897,12 +897,15 @@ case class AgreeCount(left: Expression, right: Expression) extends BinaryExpress
   * must stay data), the MergeAll convention. */
 case class CountIn(child: Expression, words: Seq[String]) extends UnaryExpression {
   override def dataType: DataType = IntegerType
-  @transient private lazy val ws = words.map(UTF8String.fromString).toArray
+  @transient private lazy val set = {
+    val h = new java.util.HashSet[UTF8String](words.length * 2)
+    words.foreach(w => h.add(UTF8String.fromString(w)))
+    h
+  }
   override def nullSafeEval(input: Any): Any =
-    HashOps.countIn(input.asInstanceOf[ArrayData], ws)
+    HashOps.countIn(input.asInstanceOf[ArrayData], set)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val r = ctx.addReferenceObj("countInWords", ws,
-      "org.apache.spark.unsafe.types.UTF8String[]")
+    val r = ctx.addReferenceObj("countInSet", set, "java.util.HashSet")
     defineCodeGen(ctx, ev, c => s"graft.functions.HashOps.countIn($c, $r)")
   }
   override protected def withNewChildInternal(c: Expression): CountIn = copy(child = c)
@@ -936,43 +939,4 @@ case class CountAlphaTokens(child: Expression) extends UnaryExpression {
     defineCodeGen(ctx, ev, c => s"graft.functions.HashOps.countAlphaTokens($c)")
   override protected def withNewChildInternal(c: Expression): CountAlphaTokens = copy(child = c)
   override def prettyName: String = "count_alpha_tokens"
-}
-
-/** Registers the sketch expressions as SQL functions on a session, so
-  * operators can use them inside `expr(...)` / `spark.sql(...)` and they
-  * compose with higher-order functions. */
-object GraftFunctions {
-  private def intLit(e: Expression, what: String): Int = e match {
-    case Literal(v: Int, IntegerType) => v
-    case other => throw new IllegalArgumentException(s"$what must be an int literal, got $other")
-  }
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    // idempotent: every operator entry point calls this, and re-replacing
-    // emits a Spark WARN per function per call — skip when our set is
-    // already in the session (replace stays the path if any is missing)
-    if (reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("drop_chunks"))) return
-    reg.createOrReplaceTempFunction(
-      "minhash_sig", exprs => MinHashSig(exprs.head, intLit(exprs(1), "k")), "built-in")
-    reg.createOrReplaceTempFunction(
-      "shingle_hashes", exprs => ShingleHashes(exprs.head, intLit(exprs(1), "n")), "built-in")
-    reg.createOrReplaceTempFunction(
-      "shingle_pairs", exprs => ShinglePairs(exprs.head, intLit(exprs(1), "n")), "built-in")
-    reg.createOrReplaceTempFunction(
-      "chunk_hashes", exprs => ChunkHashes(exprs.head, intLit(exprs(1), "w")), "built-in")
-    reg.createOrReplaceTempFunction(
-      "span_hashes", exprs => SpanHashes(exprs.head, intLit(exprs(1), "w")), "built-in")
-    reg.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "simhash128", exprs => SimHash128(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "hyperplane_sig", exprs => HyperplaneSig(exprs.head, intLit(exprs(1), "bits")), "built-in")
-    reg.createOrReplaceTempFunction(
-      "rolling_fingerprint", exprs => RollingFingerprint(exprs.head, intLit(exprs(1), "w")), "built-in")
-    reg.createOrReplaceTempFunction(
-      "drop_chunks",
-      exprs => DropChunks(exprs.head, exprs(1), intLit(exprs(2), "w")), "built-in")
-  }
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, MapData}
@@ -156,12 +156,33 @@ object VectorOps {
   }
 }
 
+/** Analysis-time argument check shared by the vector kernels: they read
+  * elements through getFloat/getDouble, so an `array<int>` argument would
+  * evaluate to garbage doubles instead of failing. */
+private[functions] object VectorInputs {
+  type Arg = (Expression, DataType => Boolean, String)
+  def isVector(t: DataType): Boolean = t match {
+    case ArrayType(FloatType | DoubleType, _) => true
+    case _ => false
+  }
+  def vector(x: Expression): Arg = (x, isVector, "array<float> or array<double>")
+  def check(kernel: String, args: Arg*): TypeCheckResult =
+    args.collectFirst { case (x, ok, want) if !ok(x.dataType) =>
+      TypeCheckResult.TypeCheckFailure(
+        s"$kernel expects $want, got ${x.dataType.catalogString}")
+    }.getOrElse(TypeCheckResult.TypeCheckSuccess)
+  def vectors(kernel: String, xs: Expression*): TypeCheckResult =
+    check(kernel, xs.map(vector): _*)
+}
+
 /** cosine_sim(a array<float|double>, b array<float|double>) → double.
   * The higher-order-function spelling (`aggregate(zip_with(..))`) is
   * interpreted per element — three lambda invocations per dimension; this
   * expression is one static call inside whole-stage codegen. */
 case class CosineSim(left: Expression, right: Expression) extends BinaryExpression {
   override def dataType: DataType = DoubleType
+  override def checkInputDataTypes(): TypeCheckResult =
+    VectorInputs.vectors(prettyName, left, right)
   private def isFloat(e: Expression): Boolean =
     e.dataType.asInstanceOf[ArrayType].elementType == FloatType
   private lazy val fa = isFloat(left)
@@ -181,6 +202,10 @@ case class CosineSim(left: Expression, right: Expression) extends BinaryExpressi
   * step runs as a pure projection over the scan, no join, no shuffle. */
 case class NearestCentroid(left: Expression, right: Expression) extends BinaryExpression {
   override def dataType: DataType = IntegerType
+  override def checkInputDataTypes(): TypeCheckResult =
+    VectorInputs.check(prettyName, VectorInputs.vector(left),
+      (right, { case ArrayType(ArrayType(DoubleType, _), _) => true; case _ => false },
+        "array<array<double>>"))
   private lazy val floats =
     left.dataType.asInstanceOf[ArrayType].elementType == FloatType
   override def nullSafeEval(v: Any, c: Any): Any =
@@ -195,6 +220,8 @@ case class NearestCentroid(left: Expression, right: Expression) extends BinaryEx
 /** l2_norm(v array<float|double>) → double: codegen'd euclidean norm. */
 case class L2Norm(child: Expression) extends UnaryExpression {
   override def dataType: DataType = DoubleType
+  override def checkInputDataTypes(): TypeCheckResult =
+    VectorInputs.vectors(prettyName, child)
   private lazy val floats =
     child.dataType.asInstanceOf[ArrayType].elementType == FloatType
   override def nullSafeEval(v: Any): Any =
@@ -211,6 +238,8 @@ case class L2Norm(child: Expression) extends UnaryExpression {
   * aggregate(zip_with(...)) spelling evaluated interpreted per element. */
 case class L2SqDist(left: Expression, right: Expression) extends BinaryExpression {
   override def dataType: DataType = DoubleType
+  override def checkInputDataTypes(): TypeCheckResult =
+    VectorInputs.vectors(prettyName, left, right)
   private def isFloat(e: Expression): Boolean =
     e.dataType.asInstanceOf[ArrayType].elementType == FloatType
   private lazy val fa = isFloat(left)
@@ -228,6 +257,8 @@ case class L2SqDist(left: Expression, right: Expression) extends BinaryExpressio
   * the IVF-ADC residual (elementwise difference), codegen'd. */
 case class VecSub(left: Expression, right: Expression) extends BinaryExpression {
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+  override def checkInputDataTypes(): TypeCheckResult =
+    VectorInputs.vectors(prettyName, left, right)
   private def isFloat(e: Expression): Boolean =
     e.dataType.asInstanceOf[ArrayType].elementType == FloatType
   private lazy val fa = isFloat(left)
@@ -245,6 +276,9 @@ case class VecSub(left: Expression, right: Expression) extends BinaryExpression 
   * scalar division (the unit-normalize step), codegen'd. */
 case class VecDiv(left: Expression, right: Expression) extends BinaryExpression {
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+  override def checkInputDataTypes(): TypeCheckResult =
+    VectorInputs.check(prettyName, VectorInputs.vector(left),
+      (right, _ == DoubleType, "double"))
   private lazy val floats =
     left.dataType.asInstanceOf[ArrayType].elementType == FloatType
   override def nullSafeEval(v: Any, s: Any): Any =
@@ -261,6 +295,10 @@ case class VecDiv(left: Expression, right: Expression) extends BinaryExpression 
   * replacement for the transform(sequence)/element_at spelling. */
 case class DenseFromMap(child: Expression, dim: Int) extends UnaryExpression {
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+  override def checkInputDataTypes(): TypeCheckResult =
+    VectorInputs.check(prettyName,
+      (child, { case MapType(IntegerType, DoubleType, _) => true; case _ => false },
+        "map<int,double>"))
   override def nullSafeEval(m: Any): Any =
     VectorOps.denseFromMap(m.asInstanceOf[MapData], dim)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -278,6 +316,8 @@ case class VecScale(child: Expression, factor: Float) extends UnaryExpression {
     child.dataType.asInstanceOf[ArrayType].elementType == FloatType
   override def dataType: DataType =
     ArrayType(if (floats) FloatType else DoubleType, containsNull = false)
+  override def checkInputDataTypes(): TypeCheckResult =
+    VectorInputs.vectors(prettyName, child)
   override def nullSafeEval(v: Any): Any =
     if (floats) VectorOps.vecScaleF(v.asInstanceOf[ArrayData], factor)
     else VectorOps.vecScaleD(v.asInstanceOf[ArrayData], factor.toDouble)
@@ -288,20 +328,4 @@ case class VecScale(child: Expression, factor: Float) extends UnaryExpression {
       defineCodeGen(ctx, ev, v => s"graft.functions.VectorOps.vecScaleD($v, ${factor.toDouble})")
   override protected def withNewChildInternal(c: Expression): VecScale = copy(child = c)
   override def prettyName: String = "vec_scale"
-}
-
-object VectorFunctions {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    // idempotent — see GraftFunctions.register
-    if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_sim")))
-      reg.createOrReplaceTempFunction(
-        "cosine_sim", exprs => CosineSim(exprs.head, exprs(1)), "built-in")
-    if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("nearest_centroid")))
-      reg.createOrReplaceTempFunction(
-        "nearest_centroid", exprs => NearestCentroid(exprs.head, exprs(1)), "built-in")
-    if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("l2_norm")))
-      reg.createOrReplaceTempFunction(
-        "l2_norm", exprs => L2Norm(exprs.head), "built-in")
-  }
 }

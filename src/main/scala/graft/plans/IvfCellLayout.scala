@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.Tables
-import graft.functions.VectorFunctions
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -40,7 +40,6 @@ object IvfCellLayout {
   /** Probe: nearest nprobe cells per query, exact cosine re-rank of ONLY
     * those cells' partitions (dynamic partition pruning on the cell join). */
   def topK(spark: SparkSession, path: String, k: Int, nprobe: Int): DataFrame = {
-    VectorFunctions.register(spark)
     val base = spark.read.parquet(basePath(path))
     val centroids = spark.read.parquet(centroidPath(path))
     val queries = base.filter(col("vec_id") < 8)
@@ -50,14 +49,14 @@ object IvfCellLayout {
     // the interpreted per-element lambda (guide §4)
     val wProbe = Window.partitionBy(col("query_id")).orderBy(col("dist"), col("cell"))
     val probes = queries.crossJoin(broadcast(centroids))
-      .withColumn("dist", graft.operators.Similarity.l2SqDistCol(col("q_emb"), col("centroid")))
+      .withColumn("dist", GraftFunctions.l2SqDist(col("q_emb"), col("centroid")))
       .withColumn("probe_rank", row_number().over(wProbe))
       .filter(col("probe_rank") <= nprobe)
       .select(col("query_id"), col("q_emb"), col("cell"))
     val w = Window.partitionBy(col("query_id")).orderBy(col("raw_cos").desc, col("vec_id"))
     base.join(probes, Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("raw_cos", expr("cosine_sim(q_emb, embedding)"))
+      .withColumn("raw_cos", GraftFunctions.cosineSim(col("q_emb"), col("embedding")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("vec_id"),

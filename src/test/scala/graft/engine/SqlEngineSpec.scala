@@ -297,6 +297,26 @@ class SqlEngineSpec extends AnyFunSuite {
     assert(e.execute("SELECT 'abc' AS user").collect()(0).getString(0) == "abc")
   }
 
+  test("session functions bind per engine: two engines on one SparkSession keep their own values") {
+    // the reference binds these per connection; engines sharing one
+    // SparkSession must not re-point each other's values
+    val catalog = new Catalog(Files.createTempDirectory("graft-wh-").toString)
+    def fns(e: SqlEngine): (String, String, Int) = {
+      val r = e.execute("SELECT current_user, current_database(), inet_client_port()").collect()(0)
+      (r.getString(0), r.getString(1), r.getInt(2))
+    }
+    val alice = new SqlEngine(spark, catalog, SqlContext("db1", "alice"))
+    alice.execute("CREATE DATABASE db1")
+    assert(fns(alice) == (("alice", "db1", 0)))
+    val bob = new SqlEngine(spark, catalog, SqlContext("db2", "bob", port = 5))
+    bob.execute("CREATE DATABASE db2")
+    assert(fns(bob) == (("bob", "db2", 5)))
+    assert(fns(alice) == (("alice", "db1", 0)), "constructing bob re-pointed alice's values")
+    val planned = alice.execute("SELECT current_user AS u")
+    assert(fns(bob) == (("bob", "db2", 5)))
+    assert(planned.collect()(0).getString(0) == "alice")
+  }
+
   test("COPY is a silent no-op (reference src/sql/postgresql/mod.rs:548,564-566)") {
     val e = freshEngine()
     e.execute("CREATE DATABASE test1")

@@ -361,7 +361,6 @@ class PlanQualitySpec extends AnyFunSuite {
     // exchanges must stay 2x8-byte sketch + band scalars; text or the
     // token array on the wire would undo the whole point
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val corpus = (0 until 60).map(i => (i.toLong, s"text ${i % 9} one two three four"))
       .toDF("doc_id", "text")
     val p = graft.operators.Dedup.simhashPairs128(corpus, 3, Some(0.0))
